@@ -127,7 +127,7 @@ final class Alterator(
           },
           Map.empty[String, String])
       } else {
-        val (fields, parts, props) = catalog.getIcebergView(db, table)
+        val (fields, parts, props) = catalog.icebergView(info)
           .getOrElse(throw new IllegalStateException(
             s"$tableName is not an ICEBERG table. Please check."))
         (fields.map(f => f.copy(dataType = TypeNorm.mapIcebergToSparkDtype(f.dataType))),
@@ -225,11 +225,11 @@ final class Alterator(
           case None => ()
         }
 
-        applyUpdate(db, table, tableName, add, drop)
+        applyUpdate(info, tableName, add, drop)
     }
   }
 
-  private def applyUpdate(db: String, table: String, tableName: String,
+  private def applyUpdate(info: CatalogTableInfo, tableName: String,
       add: Seq[PartitionKey], drop: Seq[PartitionKey]): Unit = {
     if (add.isEmpty && drop.isEmpty) {
       report.identical += tableName
@@ -243,14 +243,13 @@ final class Alterator(
         "add" -> JArr(add.map(Report.columnRecord)),
         "delete" -> JArr(drop.map(Report.columnRecord))))
 
-    if (validate) {
-      val v = catalog.latestVersion(db, table)
-      report.success += successRecord(v, v)
-    } else {
-      val prev = catalog.latestVersion(db, table)
-      catalog.updateSchema(db, table, add, drop) match {
+    // the version the fetch saw; a catalog that reports none is asked
+    val prev = info.version.getOrElse(catalog.latestVersion(info.db, info.table))
+    if (validate) report.success += successRecord(prev, prev)
+    else {
+      catalog.updateSchema(info.db, info.table, add, drop) match {
         case Right(_) =>
-          report.success += successRecord(prev, catalog.latestVersion(db, table))
+          report.success += successRecord(prev, catalog.latestVersion(info.db, info.table))
         case Left(_) =>
           report.errored += tableName
       }

@@ -9,6 +9,19 @@ import graft.meta.model._
   * in-memory) in tests and a Glue-backed Hive metastore in production
   * with zero code change. Glue table *versions* (S7) have no Spark
   * equivalent, so adapters may return a stub.
+  *
+  * Catalog calls per table for one [[graft.meta.app.Alterator]] pass,
+  * over an adapter whose `getTable` fills `version` and whose
+  * `icebergView` reads the fetched table (as [[GlueCatalog]] does):
+  *  - a DDL skipped before the lookup (no table name, not a CREATE): none;
+  *  - every other table: one `getTable`, which is all that a new,
+  *    identical, skipped or format-changed table, or a validate-mode
+  *    change, costs;
+  *  - an existing Iceberg table (not a migration): one metadata read more;
+  *  - an applied Hive change: the read-modify-write fetch inside
+  *    `updateSchema`, the write, and one `latestVersion` for the new id.
+  * A `getTable` that carries no version costs one more `latestVersion`
+  * for `previous_version` wherever a change is reported.
   */
 trait CatalogAdapter {
 
@@ -20,6 +33,14 @@ trait CatalogAdapter {
     */
   def getIcebergView(db: String, table: String)
       : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])]
+
+  /** S8 for a table already fetched with [[getTable]]. Adapters whose
+    * fetched table carries the metadata pointer override this to skip
+    * a second catalog lookup.
+    */
+  def icebergView(info: CatalogTableInfo)
+      : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])] =
+    getIcebergView(info.db, info.table)
 
   /** S7 — latest table version id; "0" where unsupported. */
   def latestVersion(db: String, table: String): String
@@ -50,7 +71,7 @@ final class InMemoryCatalog extends CatalogAdapter {
     icebergViews((db, table)) = (fields, parts, props)
 
   override def getTable(db: String, table: String): Option[CatalogTableInfo] =
-    tables.get((db, table))
+    tables.get((db, table)).map(_.copy(version = versions.get((db, table)).map(_.toString)))
 
   override def getIcebergView(db: String, table: String)
       : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])] =

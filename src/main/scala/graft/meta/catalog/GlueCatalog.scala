@@ -64,6 +64,15 @@ trait GlueApi {
   * below is unit-tested against [[graft.meta.catalog.FakeGlueApi]]-style
   * doubles; bind [[AwsSdkGlueApi]] for a real deployment.
   *
+  * Glue calls per table, by outcome, in one Alterator pass (see
+  * [[CatalogAdapter]]): one `get_table` for a new, identical, skipped or
+  * format-changed table and for a validate-mode change; one `get_table`
+  * plus one metadata read for an existing Iceberg table; two `get_table`,
+  * one `update_table` and one `get_table_versions` for an applied Hive
+  * change. The version before a change is the `VersionId` of the first
+  * `get_table`; only a response without one costs a `get_table_versions`
+  * more.
+  *
   * @param readFile fetches `metadata_location` content for Iceberg
   *                 tables (S8); injected so tests use local files and
   *                 production uses Hadoop FS (file://, hdfs://, s3a://).
@@ -94,7 +103,9 @@ final class GlueCatalog(
           inputFormat = in.storageDescriptor.inputFormat,
           outputFormat = in.storageDescriptor.outputFormat,
           storedAsParquet = in.storageDescriptor.serializationLibrary.exists(_.contains("parquet")) ||
-            in.storageDescriptor.inputFormat.exists(_.toLowerCase.contains("parquet"))))
+            in.storageDescriptor.inputFormat.exists(_.toLowerCase.contains("parquet")),
+          // AwsSdkGlueApi reports an absent VersionId as ""
+          version = t.readOnlyKeys.get("VersionId").filter(_.nonEmpty)))
     }
 
   /** S8 — a Glue entry for an Iceberg table carries `metadata_location`
@@ -105,22 +116,19 @@ final class GlueCatalog(
     * Iceberg table down the Hive diff path. */
   override def getIcebergView(db: String, table: String)
       : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])] =
-    api.getTable(db, table) match {
-      case Left(e) if e.code == "EntityNotFoundException" => None
-      case Left(e) => throw new RuntimeException(
-        s"Glue get_table($db.$table): ${e.code} ${e.message}")
-      case Right(t) =>
-        t.input.parameters.get("metadata_location")
-          .orElse(t.input.parameters.get("metadata-location"))
-          .map { location =>
-            val parsed =
-              try IcebergMetadataJson.parse(readFile(location))
-              catch {
-                case e: Exception => throw new RuntimeException(
-                  s"unreadable Iceberg metadata for $db.$table at $location: ${e.getMessage}", e)
-              }
-            (parsed.fields, parsed.partitionFields, parsed.properties)
-          }
+    getTable(db, table).flatMap(icebergView)
+
+  /** S8 from the parameters of a table already fetched: no Glue call. */
+  override def icebergView(info: CatalogTableInfo)
+      : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])] =
+    IcebergMetadataJson.location(info.parameters).map { location =>
+      val parsed =
+        try IcebergMetadataJson.parse(readFile(location))
+        catch {
+          case e: Exception => throw new RuntimeException(
+            s"unreadable Iceberg metadata for ${info.qualified} at $location: ${e.getMessage}", e)
+        }
+      (parsed.fields, parsed.partitionFields, parsed.properties)
     }
 
   /** S7 — newest version id; throws when the list is empty, as the

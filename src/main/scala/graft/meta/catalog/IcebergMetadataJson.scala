@@ -24,6 +24,11 @@ object IcebergMetadataJson {
       partitionFields: Seq[IcebergPartField],
       properties: Map[String, String])
 
+  /** The `metadata.json` pointer a catalog entry for an Iceberg table
+    * carries in its parameters; None for a non-Iceberg table. */
+  def location(parameters: Map[String, String]): Option[String] =
+    parameters.get("metadata_location").orElse(parameters.get("metadata-location"))
+
   def parse(json: String): Metadata = {
     val root = mapper.readTree(json)
     val schemaId = root.get("current-schema-id").asInt()

@@ -49,20 +49,19 @@ final class SparkSessionCatalog(spark: SparkSession) extends CatalogAdapter {
   }
 
   override def getIcebergView(db: String, table: String)
-      : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])] = {
+      : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])] =
+    getTable(db, table).flatMap(icebergView)
+
+  override def icebergView(info: CatalogTableInfo)
+      : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])] =
     // No Iceberg runtime ships in this environment, but a Glue/Hive
     // catalog entry for an Iceberg table always carries its
     // `metadata_location` property — read that metadata.json through
     // the Hadoop filesystem (so file://, hdfs:// and s3a:// all work)
     // and project it with IcebergMetadataJson. A production build can
     // load through Iceberg's SparkCatalog instead; semantics match.
-    val ident = TableIdentifier(table, Some(db))
-    if (!catalog.tableExists(ident)) None
-    else for {
-      meta <- Try(catalog.getTableMetadata(ident)).toOption
-      location <- meta.properties.get("metadata_location")
-        .orElse(meta.properties.get("metadata-location"))
-      parsed <- Try {
+    IcebergMetadataJson.location(info.parameters).flatMap { location =>
+      Try {
         val path = new org.apache.hadoop.fs.Path(location)
         val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
         val in = fs.open(path)
@@ -71,8 +70,7 @@ final class SparkSessionCatalog(spark: SparkSession) extends CatalogAdapter {
           finally in.close()
         IcebergMetadataJson.parse(text)
       }.toOption
-    } yield (parsed.fields, parsed.partitionFields, parsed.properties)
-  }
+    }.map(parsed => (parsed.fields, parsed.partitionFields, parsed.properties))
 
   override def latestVersion(db: String, table: String): String = "0"
 

@@ -43,6 +43,9 @@ object TableFormat {
 /** Catalog view of a table — the engine-agnostic subset of a Glue
   * `get_table` response / Spark `CatalogTable` the rules consume
   * (reference: src/utils/glue_utils.py:13-32, consumed alterator.py:598-631).
+  *
+  * `version` is the table version the fetch saw (Glue's `VersionId`),
+  * None where the catalog's response carries none.
   */
 final case class CatalogTableInfo(
     db: String,
@@ -54,6 +57,7 @@ final case class CatalogTableInfo(
     serializationLibrary: Option[String] = None,
     inputFormat: Option[String] = None,
     outputFormat: Option[String] = None,
-    storedAsParquet: Boolean = false) {
+    storedAsParquet: Boolean = false,
+    version: Option[String] = None) {
   def qualified: String = s"$db.$table"
 }

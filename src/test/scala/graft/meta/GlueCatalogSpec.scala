@@ -8,7 +8,8 @@ import graft.meta.catalog._
 import graft.meta.model._
 
 /** Fake Glue service: records every updateTable input so the spec can
-  * assert exactly what would go over the wire (glue_utils.py:35-87).
+  * assert exactly what would go over the wire (glue_utils.py:35-87),
+  * and counts the calls of each API.
   */
 final class FakeGlueApi extends GlueApi {
   var tables: Map[(String, String), GlueTable] = Map.empty
@@ -16,25 +17,45 @@ final class FakeGlueApi extends GlueApi {
   var updates: Vector[(String, GlueTableInput)] = Vector.empty
   var updateStatus: Int = 200
   var failGetWith: Option[GlueApiError] = None
+  var getTableCalls: Int = 0
+  var getVersionsCalls: Int = 0
 
-  override def getTable(db: String, name: String): Either[GlueApiError, GlueTable] =
+  override def getTable(db: String, name: String): Either[GlueApiError, GlueTable] = {
+    getTableCalls += 1
     failGetWith.map(Left(_)).getOrElse(
       tables.get((db, name)).toRight(
         GlueApiError("EntityNotFoundException", s"Table $name not found in database $db")))
+  }
 
-  override def getTableVersions(db: String, t: String): Either[GlueApiError, Seq[String]] =
+  override def getTableVersions(db: String, t: String): Either[GlueApiError, Seq[String]] = {
+    getVersionsCalls += 1
     Right(versions.getOrElse((db, t), Nil))
+  }
 
+  /** Like Glue, a write makes a new table version: it heads the version
+    * list and is the VersionId the next get_table returns. */
   override def updateTable(db: String, input: GlueTableInput): Either[GlueApiError, Int] = {
     updates :+= (db, input)
-    tables.get((db, input.name)).foreach { prev =>
-      tables += ((db, input.name) -> prev.copy(input = input))
+    val key = (db, input.name)
+    tables.get(key).foreach { prev =>
+      val history = versions.getOrElse(key, Nil)
+      val next = history.headOption.fold(1)(_.toInt + 1).toString
+      versions += (key -> (next +: history))
+      tables += (key -> prev.copy(input = input,
+        readOnlyKeys = prev.readOnlyKeys.updated("VersionId", next)))
     }
     Right(updateStatus)
   }
 }
 
+object GlueCatalogSpec {
+  /** Glue calls one Alterator run costs: get_table, get_table_versions,
+    * update_table, and metadata reads. */
+  final case class Calls(getTable: Int, getVersions: Int, updates: Int, reads: Int)
+}
+
 class GlueCatalogSpec extends AnyFunSuite {
+  import GlueCatalogSpec.Calls
 
   private def fixture(): (FakeGlueApi, GlueCatalog) = {
     val api = new FakeGlueApi
@@ -64,6 +85,7 @@ class GlueCatalogSpec extends AnyFunSuite {
     assert(info.partitionKeys == Seq(PartitionKey("day_rk", "date")))
     assert(info.tableType == "EXTERNAL_TABLE")
     assert(info.storedAsParquet)
+    assert(info.version.contains("7")) // the response's VersionId
   }
 
   test("EntityNotFoundException is the new-table signal (None); other errors throw") {
@@ -202,18 +224,12 @@ class GlueCatalogSpec extends AnyFunSuite {
 
   test("EP1 end-to-end through GlueCatalog: DDL vs Glue table, applied via update_table") {
     val (api, cat) = fixture()
-    val ddl =
-      """CREATE EXTERNAL TABLE `db1.t1` (
-        |  `id` BIGINT,
-        |  `name` STRING,
-        |  `amount` DOUBLE
-        |)
-        |PARTITIONED BY (`day_rk` DATE)
-        |STORED AS PARQUET""".stripMargin
     val report = new graft.meta.app.Alterator(cat)
-      .alterSchema(Seq(graft.meta.app.Alterator.DdlSource("t1.hql", ddl))).render
+      .alterSchema(Seq(graft.meta.app.Alterator.DdlSource("t1.hql", addAmountDdl))).render
     // the diff is add `amount`; applied through the Glue wire call
     assert(report.contains(""""num_updates": 1"""), report)
+    assert(report.contains(""""previous_version": "7"""), report)
+    assert(report.contains(""""current_version": "8"""), report)
     assert(report.contains(""""Name": "amount""""), report)
     assert(api.updates.size == 1, report)
     val (_, sent) = api.updates.last
@@ -221,8 +237,83 @@ class GlueCatalogSpec extends AnyFunSuite {
       Seq("id", "name", "amount"))
     // fixpoint: re-running the same DDL now diffs clean (no_changes)
     val report2 = new graft.meta.app.Alterator(cat)
-      .alterSchema(Seq(graft.meta.app.Alterator.DdlSource("t1.hql", ddl))).render
+      .alterSchema(Seq(graft.meta.app.Alterator.DdlSource("t1.hql", addAmountDdl))).render
     assert(api.updates.size == 1, report2)
+  }
+
+  private def alterOne(api: FakeGlueApi, ddl: String, validate: Boolean = false,
+      metadata: String = ""): (Calls, String) = {
+    val (t0, v0, u0) = (api.getTableCalls, api.getVersionsCalls, api.updates.size)
+    var reads = 0
+    val cat = new GlueCatalog(api, readFile = { _ => reads += 1; metadata })
+    val report = new graft.meta.app.Alterator(cat, validate = validate)
+      .alterSchema(Seq(graft.meta.app.Alterator.DdlSource("t.hql", ddl))).render
+    (Calls(api.getTableCalls - t0, api.getVersionsCalls - v0, api.updates.size - u0, reads),
+      report)
+  }
+
+  private val addAmountDdl =
+    """CREATE EXTERNAL TABLE `db1.t1` (
+      |  `id` BIGINT,
+      |  `name` STRING,
+      |  `amount` DOUBLE
+      |)
+      |PARTITIONED BY (`day_rk` DATE)
+      |STORED AS PARQUET""".stripMargin
+
+  test("Glue call budget per outcome: updated, identical, new, Iceberg") {
+    val (api, _) = fixture()
+    // updated Hive table: the fetch, the read-modify-write fetch, the
+    // write, and the version list for the new id; the old id is the
+    // fetch's VersionId
+    val (updated, r1) = alterOne(api, addAmountDdl)
+    assert(updated == Calls(getTable = 2, getVersions = 1, updates = 1, reads = 0), r1)
+    assert(r1.contains(""""previous_version": "7"""), r1)
+    assert(r1.contains(""""current_version": "8"""), r1)
+    // identical (the same DDL again) and new tables: the fetch alone
+    val (identical, r2) = alterOne(api, addAmountDdl)
+    assert(identical == Calls(1, 0, 0, 0), r2)
+    assert(r2.contains(""""identical_tables": ["db1.t1"]"""), r2)
+    val (fresh, r3) = alterOne(api, addAmountDdl.replace("db1.t1", "db1.absent"))
+    assert(fresh == Calls(1, 0, 0, 0), r3)
+    assert(r3.contains(""""new_tables": ["db1.absent"]"""), r3)
+    // existing Iceberg table: the fetch and its metadata.json, no
+    // second get_table for the metadata pointer
+    val base = api.tables(("db1", "t1"))
+    api.tables += (("db1", "ice") -> base.copy(input = base.input.copy(name = "ice",
+      parameters = Map("table_type" -> "ICEBERG", "metadata_location" -> "s3://b/v1.metadata.json"))))
+    val metadata =
+      """{"current-schema-id": 0,
+        | "schemas": [{"schema-id": 0, "fields": [{"id": 1, "name": "a", "type": "string"}]}],
+        | "default-spec-id": 0, "partition-specs": [{"spec-id": 0, "fields": []}]}""".stripMargin
+    val (iceberg, r4) = alterOne(api,
+      "CREATE TABLE `db1.ice` (`a` string, `b` bigint) USING iceberg", metadata = metadata)
+    assert(iceberg == Calls(1, 0, 0, 1), r4)
+    assert(r4.contains(""""num_iceberg_tables": 1"""), r4)
+  }
+
+  test("Glue call budget in validate mode: one get_table, version from its VersionId") {
+    val (api, _) = fixture()
+    val (calls, report) = alterOne(api, addAmountDdl, validate = true)
+    assert(calls == Calls(1, 0, 0, 0), report)
+    assert(report.contains(""""previous_version": "7"""), report)
+    assert(report.contains(""""current_version": "7"""), report)
+  }
+
+  test("a get_table without a VersionId, or an empty one, falls back to get_table_versions") {
+    for (keys <- Seq(Map("CatalogId" -> "123"), Map("VersionId" -> ""))) {
+      val (api, cat) = fixture()
+      val t = api.tables(("db1", "t1"))
+      api.tables += (("db1", "t1") -> t.copy(readOnlyKeys = keys))
+      assert(cat.getTable("db1", "t1").get.version.isEmpty, keys)
+      val (validated, rv) = alterOne(api, addAmountDdl, validate = true)
+      assert(validated == Calls(1, 1, 0, 0), rv)
+      assert(rv.contains(""""previous_version": "7"""), rv)
+      val (applied, ra) = alterOne(api, addAmountDdl)
+      assert(applied == Calls(2, 2, 1, 0), ra)
+      assert(ra.contains(""""previous_version": "7"""), ra)
+      assert(ra.contains(""""current_version": "8"""), ra)
+    }
   }
 
   test("the full alterator apply path works through GlueCatalog (K1 parity)") {

@@ -160,11 +160,18 @@ class SessionCatalogSpec extends AnyFunSuite {
       s"""CREATE TABLE sdb.ice_t (x INT) USING parquet
          |TBLPROPERTIES ('metadata_location' = 'file://${f.toAbsolutePath}')""".stripMargin)
 
-    val (fields, parts, props) = catalog.getIcebergView("sdb", "ice_t").get
+    val view = catalog.getIcebergView("sdb", "ice_t")
+    val (fields, parts, props) = view.get
     assert(fields.map(f => (f.id, f.name, f.dataType)) ==
       Seq((1, "txn_id", "long"), (2, "day_rk", "date")))
     assert(parts.map(p => (p.fieldId, p.name)) == Seq((1000, "day_rk")))
     assert(props == Map("write.format.default" -> "parquet")) // owner stripped
+    // the same view from the table already fetched
+    val info = catalog.getTable("sdb", "ice_t").get
+    assert(catalog.icebergView(info) == view)
+    // an unreadable metadata.json or an absent table reads as no view
     Files.deleteIfExists(f)
+    assert(catalog.icebergView(info).isEmpty)
+    assert(catalog.getIcebergView("sdb", "absent_t").isEmpty)
   }
 }
