@@ -1,5 +1,7 @@
 package graft.meta.app
 
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+
 import scala.util.{Failure, Success, Try}
 
 import graft.meta.catalog.CatalogAdapter
@@ -21,6 +23,21 @@ import graft.meta.types.{Compat, TypeNorm}
   *    A.10);
   *  - a missing-backfill Iceberg DDL goes to `errored_tables` instead
   *    of crashing the process (ValueError propagated in the reference).
+  *
+  * Concurrency: the reference handles one file at a time, so a fleet
+  * run waits on its catalog round-trips one after another. Here each
+  * table's step (rules → `getTable` → diff → `updateSchema` /
+  * `latestVersion` → outcome) runs as a task on a pool of
+  * [[Alterator.MaxInFlight]] threads, created per [[alterSchema]] call,
+  * and writes its outcomes to a report builder of its own. The builders
+  * are merged in file order, so buckets, stats and rendered bytes are
+  * those of a one-at-a-time run. Files that name the same `db.table`
+  * run in one task, in file order, so a table listed twice still sees
+  * its own earlier write; the catalog therefore only ever sees
+  * overlapping calls for distinct tables (the [[CatalogAdapter]]
+  * contract). A non-fatal failure still errors only its table; a fatal
+  * one (anything `Try` lets through, such as an `InterruptedException`)
+  * cancels the remaining tasks and is re-thrown as it was raised.
   */
 final class Alterator(
     catalog: CatalogAdapter,
@@ -28,29 +45,49 @@ final class Alterator(
     force: Boolean = false,
     icebergCatalogName: String = "spark_catalog",
     emitIcebergDdl: Boolean = false) {
-  import Alterator.DdlSource
+  import Alterator.{DdlSource, Step}
 
-  private val report = new Report.Builder(validate, force)
-
+  /** The report of `sources` alone: each call starts from empty buckets. */
   def alterSchema(sources: Seq[DdlSource], accountId: String = ""): JValue = {
-    sources.foreach { src =>
-      Try(processOne(src, accountId)) match {
-        case Success(_) => ()
-        case Failure(e) =>
-          val name = DdlParsers.extractTableName(
-            DdlParsers.normalize(src.rawText, accountId))
-            .map { case (db, t) => s"$db.$t" }.getOrElse(src.filename)
-          report.errored += name
-      }
+    val steps = sources.map { src =>
+      val data = DdlParsers.normalize(src.rawText, accountId)
+      Step(src, data, DdlParsers.extractTableName(data))
     }
+    val outcomes = steps.map(_ => new Report.Builder(validate, force))
+    // one task per table, its files in file order; unnamed files alone
+    val tasks = steps.indices.groupBy(i => steps(i).name.toLeft(i)).values.toSeq.sortBy(_.head)
+    val pool = Executors.newFixedThreadPool(Alterator.MaxInFlight, { r: Runnable =>
+      val t = new Thread(r, "alterator-table-step")
+      t.setDaemon(true)
+      t
+    })
+    val done = new ExecutorCompletionService[Unit](pool)
+    try {
+      tasks.foreach(task => done.submit(() => task.foreach(i => runStep(steps(i), outcomes(i)))))
+      tasks.foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+    } finally {
+      // after a fatal failure: cancel the rest, and let no catalog call
+      // of this pass outlive it
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+    val report = new Report.Builder(validate, force)
+    outcomes.foreach(report ++= _)
     report.result
   }
 
-  private def processOne(src: DdlSource, accountId: String): Unit = {
-    val data = DdlParsers.normalize(src.rawText, accountId)
+  private def runStep(step: Step, report: Report.Builder): Unit =
+    if (Try(processOne(step, report)).isFailure)
+      report.errored += step.name.fold(step.src.filename) { case (db, t) => s"$db.$t" }
+
+  private def processOne(step: Step, report: Report.Builder): Unit = {
+    val Step(src, data, name) = step
     if (data.isEmpty) throw new IllegalStateException(s"No content for ${src.filename}")
 
-    DdlParsers.extractTableName(data) match {
+    name match {
       case None =>
         report.skipped += obj(
           "table_name" -> str(""),
@@ -72,19 +109,19 @@ final class Alterator(
         val validations = Rules.initialRules.map(_._1)
           .filter(r => !checks(r) && r != "ICEBERG_CHECK") ++
           (if (checks("ICEBERG_CHECK")) Seq("ICEBERG_CHECK") else Nil)
-        if (validations.isEmpty) hivePath(db, table, tableName, data)
-        else nonHivePath(db, table, tableName, data, validations)
+        if (validations.isEmpty) hivePath(db, table, tableName, data, report)
+        else nonHivePath(db, table, tableName, data, validations, report)
     }
   }
 
   /** Routing when a rule failed or the DDL is Iceberg (alterator.py:546-596). */
   private def nonHivePath(db: String, table: String, tableName: String,
-      data: String, validations: Seq[String]): Unit = {
+      data: String, validations: Seq[String], report: Report.Builder): Unit = {
     catalog.getTable(db, table) match {
       case None =>
         report.newTables += tableName
       case Some(info) =>
-        if (validations.contains("ICEBERG_CHECK")) icebergPath(db, table, tableName, data, info)
+        if (validations.contains("ICEBERG_CHECK")) icebergPath(db, table, tableName, data, info, report)
         else if (validations.contains("PARQUET_CHECK")) {
           Rules.formatChanged(info, TableFormat.Text) match {
             case Some((oldF, newF)) =>
@@ -106,7 +143,7 @@ final class Alterator(
 
   /** EP2 — Iceberg planning (alterator.py:554-578 → handler). */
   private def icebergPath(db: String, table: String, tableName: String,
-      data: String, info: CatalogTableInfo): Unit = {
+      data: String, info: CatalogTableInfo, report: Report.Builder): Unit = {
     val migration = Rules.formatChanged(info, TableFormat.Iceberg) match {
       case Some((oldF, newF)) =>
         report.formatChanged += formatChangeRecord(tableName, oldF, newF)
@@ -155,7 +192,8 @@ final class Alterator(
   }
 
   /** The Hive/Parquet apply path (alterator.py:598-735). */
-  private def hivePath(db: String, table: String, tableName: String, data: String): Unit = {
+  private def hivePath(db: String, table: String, tableName: String, data: String,
+      report: Report.Builder): Unit = {
     catalog.getTable(db, table) match {
       case None =>
         report.newTables += tableName
@@ -225,12 +263,12 @@ final class Alterator(
           case None => ()
         }
 
-        applyUpdate(info, tableName, add, drop)
+        applyUpdate(info, tableName, add, drop, report)
     }
   }
 
   private def applyUpdate(info: CatalogTableInfo, tableName: String,
-      add: Seq[PartitionKey], drop: Seq[PartitionKey]): Unit = {
+      add: Seq[PartitionKey], drop: Seq[PartitionKey], report: Report.Builder): Unit = {
     if (add.isEmpty && drop.isEmpty) {
       report.identical += tableName
       return
@@ -265,4 +303,15 @@ final class Alterator(
 
 object Alterator {
   final case class DdlSource(filename: String, rawText: String)
+
+  /** Table steps run at once, hence the most catalog calls in flight.
+    * On the benchmark's 458-table fleet at 20 ms per Glue call (4 vCPU
+    * host), a pass takes 18.4 s one step at a time, 4.9 s with 4, 2.9 s
+    * with 8 and 2.0 s with 16: 8 keeps most of the gain and holds one
+    * run to 8 requests at a time against a real Glue account, which
+    * limits the risk of being throttled. */
+  val MaxInFlight = 8
+
+  /** A source with its normalized text and the table it names. */
+  private final case class Step(src: DdlSource, data: String, name: Option[(String, String)])
 }

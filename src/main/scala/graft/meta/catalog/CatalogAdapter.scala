@@ -22,6 +22,12 @@ import graft.meta.model._
   *    `updateSchema`, the write, and one `latestVersion` for the new id.
   * A `getTable` that carries no version costs one more `latestVersion`
   * for `previous_version` wherever a change is reported.
+  *
+  * Thread safety: an Alterator pass calls an adapter from several
+  * threads at once ([[graft.meta.app.Alterator.MaxInFlight]]). Calls for
+  * distinct tables may overlap; calls for one table never do, and come
+  * in the order a one-at-a-time pass makes them. Running concurrently
+  * changes no call count above.
   */
 trait CatalogAdapter {
 
@@ -53,7 +59,8 @@ trait CatalogAdapter {
 }
 
 /** Test-double catalog mirroring Glue semantics, including version
-  * increments on update.
+  * increments on update. Every access holds the instance's lock, so
+  * concurrent callers see each update whole.
   */
 final class InMemoryCatalog extends CatalogAdapter {
   private val tables = scala.collection.mutable.Map.empty[(String, String), CatalogTableInfo]
@@ -61,27 +68,31 @@ final class InMemoryCatalog extends CatalogAdapter {
   private val icebergViews = scala.collection.mutable.Map
     .empty[(String, String), (Seq[IcebergField], Seq[IcebergPartField], Map[String, String])]
 
-  def put(info: CatalogTableInfo): Unit = {
+  def put(info: CatalogTableInfo): Unit = synchronized {
     tables((info.db, info.table)) = info
     versions.getOrElseUpdate((info.db, info.table), 1)
   }
 
   def putIceberg(db: String, table: String, fields: Seq[IcebergField],
-      parts: Seq[IcebergPartField], props: Map[String, String]): Unit =
+      parts: Seq[IcebergPartField], props: Map[String, String]): Unit = synchronized {
     icebergViews((db, table)) = (fields, parts, props)
+  }
 
-  override def getTable(db: String, table: String): Option[CatalogTableInfo] =
+  override def getTable(db: String, table: String): Option[CatalogTableInfo] = synchronized {
     tables.get((db, table)).map(_.copy(version = versions.get((db, table)).map(_.toString)))
+  }
 
   override def getIcebergView(db: String, table: String)
-      : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])] =
+      : Option[(Seq[IcebergField], Seq[IcebergPartField], Map[String, String])] = synchronized {
     icebergViews.get((db, table))
+  }
 
-  override def latestVersion(db: String, table: String): String =
+  override def latestVersion(db: String, table: String): String = synchronized {
     versions.getOrElse((db, table), 0).toString
+  }
 
   override def updateSchema(db: String, table: String,
-      add: Seq[PartitionKey], drop: Seq[PartitionKey]): Either[String, Unit] =
+      add: Seq[PartitionKey], drop: Seq[PartitionKey]): Either[String, Unit] = synchronized {
     tables.get((db, table)) match {
       case None => Left(s"EntityNotFoundException: $db.$table")
       case Some(info) =>
@@ -92,4 +103,5 @@ final class InMemoryCatalog extends CatalogAdapter {
         versions((db, table)) = versions.getOrElse((db, table), 1) + 1
         Right(())
     }
+  }
 }

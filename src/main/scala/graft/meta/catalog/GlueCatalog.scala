@@ -73,6 +73,12 @@ trait GlueApi {
   * `get_table`; only a response without one costs a `get_table_versions`
   * more.
   *
+  * An Alterator pass has at most [[graft.meta.app.Alterator.MaxInFlight]]
+  * (8) of these calls in flight at once, each for a different table; the
+  * per-outcome counts above are the same as in a one-at-a-time pass. The
+  * adapter holds no mutable state, so it is safe under that overlap as
+  * long as the [[GlueApi]] is (the AWS SDK client is).
+  *
   * @param readFile fetches `metadata_location` content for Iceberg
   *                 tables (S8); injected so tests use local files and
   *                 production uses Hadoop FS (file://, hdfs://, s3a://).

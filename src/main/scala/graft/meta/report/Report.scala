@@ -14,7 +14,7 @@ import graft.meta.model.JValue.{obj, str}
   */
 object Report {
 
-  /** Outcome buckets, accumulated per run. */
+  /** Outcome buckets, accumulated per table or per run. */
   final class Builder(validate: Boolean, force: Boolean) {
     val skipped = mutable.ArrayBuffer.empty[JValue]
     val newTables = mutable.ArrayBuffer.empty[String]
@@ -24,6 +24,19 @@ object Report {
     val nonParquet = mutable.ArrayBuffer.empty[String]
     val iceberg = mutable.ArrayBuffer.empty[JValue]
     val formatChanged = mutable.ArrayBuffer.empty[JValue]
+
+    /** Appends every bucket of `other` after this one's entries. */
+    def ++=(other: Builder): this.type = {
+      skipped ++= other.skipped
+      newTables ++= other.newTables
+      success ++= other.success
+      errored ++= other.errored
+      identical ++= other.identical
+      nonParquet ++= other.nonParquet
+      iceberg ++= other.iceberg
+      formatChanged ++= other.formatChanged
+      this
+    }
 
     def result: JValue = {
       val analyzed = skipped.size + newTables.size + errored.size + success.size +

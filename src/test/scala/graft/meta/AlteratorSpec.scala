@@ -291,6 +291,17 @@ class AlteratorSpec extends AnyFunSuite {
     assert(r.contains(""""identical_tables": ["sdb.raw_sales"]"""))
   }
 
+  test("a second alterSchema call on one instance reports its own sources only") {
+    val alterator = new Alterator(freshCatalog())
+    alterator.alterSchema(Seq(src("ok.hql", happyDdl)))
+    val r = alterator.alterSchema(Seq(
+      src("new.hql", happyDdl.replace("`sdb.raw_sales`", "`sdb.other`")))).render
+    assert(r.contains(""""num_tables_analyzed": 1"""), r)
+    assert(r.contains(""""num_updates": 0"""), r)
+    assert(r.contains(""""success_tables": []"""), r)
+    assert(r.contains(""""new_tables": ["sdb.other"]"""), r)
+  }
+
   test("stats block counts every bucket") {
     val catalog = freshCatalog()
     val report = new Alterator(catalog).alterSchema(Seq(

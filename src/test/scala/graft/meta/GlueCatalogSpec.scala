@@ -1,6 +1,7 @@
 package graft.meta
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,32 +10,34 @@ import graft.meta.model._
 
 /** Fake Glue service: records every updateTable input so the spec can
   * assert exactly what would go over the wire (glue_utils.py:35-87),
-  * and counts the calls of each API.
+  * and counts the calls of each API. Safe for the overlapping calls of
+  * a concurrent Alterator pass: counters are atomic, every field is
+  * volatile and `updateTable` holds the instance's lock.
   */
 final class FakeGlueApi extends GlueApi {
-  var tables: Map[(String, String), GlueTable] = Map.empty
-  var versions: Map[(String, String), Seq[String]] = Map.empty
-  var updates: Vector[(String, GlueTableInput)] = Vector.empty
-  var updateStatus: Int = 200
-  var failGetWith: Option[GlueApiError] = None
-  var getTableCalls: Int = 0
-  var getVersionsCalls: Int = 0
+  @volatile var tables: Map[(String, String), GlueTable] = Map.empty
+  @volatile var versions: Map[(String, String), Seq[String]] = Map.empty
+  @volatile var updates: Vector[(String, GlueTableInput)] = Vector.empty
+  @volatile var updateStatus: Int = 200
+  @volatile var failGetWith: Option[GlueApiError] = None
+  val getTableCalls = new AtomicInteger
+  val getVersionsCalls = new AtomicInteger
 
   override def getTable(db: String, name: String): Either[GlueApiError, GlueTable] = {
-    getTableCalls += 1
+    getTableCalls.incrementAndGet()
     failGetWith.map(Left(_)).getOrElse(
       tables.get((db, name)).toRight(
         GlueApiError("EntityNotFoundException", s"Table $name not found in database $db")))
   }
 
   override def getTableVersions(db: String, t: String): Either[GlueApiError, Seq[String]] = {
-    getVersionsCalls += 1
+    getVersionsCalls.incrementAndGet()
     Right(versions.getOrElse((db, t), Nil))
   }
 
   /** Like Glue, a write makes a new table version: it heads the version
     * list and is the VersionId the next get_table returns. */
-  override def updateTable(db: String, input: GlueTableInput): Either[GlueApiError, Int] = {
+  override def updateTable(db: String, input: GlueTableInput): Either[GlueApiError, Int] = synchronized {
     updates :+= (db, input)
     val key = (db, input.name)
     tables.get(key).foreach { prev =>
@@ -243,13 +246,13 @@ class GlueCatalogSpec extends AnyFunSuite {
 
   private def alterOne(api: FakeGlueApi, ddl: String, validate: Boolean = false,
       metadata: String = ""): (Calls, String) = {
-    val (t0, v0, u0) = (api.getTableCalls, api.getVersionsCalls, api.updates.size)
-    var reads = 0
-    val cat = new GlueCatalog(api, readFile = { _ => reads += 1; metadata })
+    val (t0, v0, u0) = (api.getTableCalls.get, api.getVersionsCalls.get, api.updates.size)
+    val reads = new AtomicInteger
+    val cat = new GlueCatalog(api, readFile = { _ => reads.incrementAndGet(); metadata })
     val report = new graft.meta.app.Alterator(cat, validate = validate)
       .alterSchema(Seq(graft.meta.app.Alterator.DdlSource("t.hql", ddl))).render
-    (Calls(api.getTableCalls - t0, api.getVersionsCalls - v0, api.updates.size - u0, reads),
-      report)
+    (Calls(api.getTableCalls.get - t0, api.getVersionsCalls.get - v0, api.updates.size - u0,
+      reads.get), report)
   }
 
   private val addAmountDdl =

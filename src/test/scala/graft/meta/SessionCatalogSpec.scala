@@ -70,6 +70,25 @@ class SessionCatalogSpec extends AnyFunSuite {
     assert(rerun.contains("sdb.raw_sales"), rerun)
   }
 
+  test("a pass over many live tables applies each in file order and re-runs clean") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS fleet")
+    val names = (0 until 2 * Alterator.MaxInFlight).map(i => s"t$i")
+    names.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS fleet.$t")
+      spark.sql(s"CREATE TABLE fleet.$t (id BIGINT, day_rk DATE) USING parquet PARTITIONED BY (day_rk)")
+    }
+    val sources = names.map(t => DdlSource(s"$t.hql",
+      s"CREATE EXTERNAL TABLE `fleet.$t`(`id` bigint, `extra` string) " +
+        "PARTITIONED BY (`day_rk` date) STORED AS PARQUET"))
+    val report = new Alterator(catalog).alterSchema(sources).render
+    assert(report.contains(s""""num_updates": ${names.size}"""), report)
+    val positions = names.map(t => report.indexOf(s""""table_name": "fleet.$t""""))
+    assert(positions == positions.sorted && !positions.contains(-1), report)
+    names.foreach(t => assert(spark.table(s"fleet.$t").schema.fieldNames.contains("extra"), t))
+    val rerun = new Alterator(catalog).alterSchema(sources).render
+    assert(rerun.contains(s""""num_identical": ${names.size}"""), rerun)
+  }
+
   test("incompatible type change without backfill is skipped, --force applies drop+add") {
     spark.sql("CREATE DATABASE IF NOT EXISTS sdb")
     spark.sql("DROP TABLE IF EXISTS sdb.typed")

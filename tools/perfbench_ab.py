@@ -26,6 +26,13 @@ for neither side), and a verdict:
                 base run;
   within bound  none of the above.
 
+Under the metric table, on the fleet workloads, a `wall_pass_ms` row gives
+each side's raw wall time of the pass the harness reported, read from the
+`passes (ms): ...` line the run prints on stderr. `pass_s` adds the injected
+catalog wait, summed over calls, to the rest of the wall time scaled by the
+host-speed probe; once calls overlap, that sum counts concurrent waits more
+than once, so the raw wall time is the honest size of a concurrency gain.
+
 It ends with the report digest each tree's harness pinned for the workload
 and seed, so a changed report shows. Nothing under perfbench/ is modified.
 """
@@ -33,12 +40,14 @@ import argparse
 import io
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
 import tarfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PASSES = re.compile(r"^passes \(ms\): ([^;]*);", re.M)
 
 
 def git(*args):
@@ -59,8 +68,20 @@ def export(rev):
     return sha, tree
 
 
+def wall_pass_ms(stderr):
+    """The raw wall time of the pass the harness reported: the median of
+    the timed passes (the upper one of two), as the harness picks it.
+    None for a workload that prints no passes line."""
+    m = PASSES.search(stderr)
+    if not m:
+        return None
+    passes = sorted(float(x) for x in m.group(1).split())
+    return passes[len(passes) // 2]
+
+
 def run(tree, args):
-    """One benchmark run in `tree`: (canary line, result line)."""
+    """One benchmark run in `tree`: (canary line, result line, raw wall
+    time of the reported pass in ms or None)."""
     cmd = [sys.executable, os.path.join("perfbench", "run.py"),
            "--workload", args.workload, "--seed", str(args.seed),
            "--seconds", str(args.seconds), "--trace", str(args.trace)]
@@ -69,12 +90,12 @@ def run(tree, args):
     if proc.returncode != 0 or len(lines) < 2:
         sys.stderr.write(proc.stderr)
         sys.exit(f"perfbench_ab: run in {tree} failed with code {proc.returncode}")
-    return json.loads(lines[-2]), json.loads(lines[-1])
+    return json.loads(lines[-2]), json.loads(lines[-1]), wall_pass_ms(proc.stderr)
 
 
-def fmt(xs):
+def fmt(xs, num="%.4g"):
     q1, qm, q3 = quartiles(xs)
-    return "%.4g [%.4g, %.4g]" % (qm, q1, q3)
+    return f"{num} [{num}, {num}]" % (qm, q1, q3)
 
 
 def quartiles(xs):
@@ -138,14 +159,16 @@ def main():
 
     results = {"base": [], "change": []}
     hosts = {"base": [], "change": []}
+    walls = {"base": [], "change": []}
     for i in range(args.pairs):
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for side in order:
-            host, res = run(trees[side], args)
+            host, res, wall = run(trees[side], args)
             results[side].append(res)
             hosts[side].append(host)
+            walls[side].append(wall)
             print(json.dumps({"run": {"pair": i + 1, "side": side, "host": host,
-                                      "result": res}}), flush=True)
+                                      "wall_pass_ms": wall, "result": res}}), flush=True)
 
     print(f"\nbase {args.base} ({sha[:10]}) vs working tree: {args.workload}, "
           f"seed {args.seed}, --seconds {args.seconds}, --trace {args.trace}, "
@@ -164,6 +187,10 @@ def main():
                           m.get("bound") if not args.trace else None)
         print(f"{name:34} {m.get('unit', ''):>5} {fmt(base):>30} "
               f"{fmt(change):>30} {wins:>3}/{args.pairs:<2}  {v}")
+    if None not in walls["base"] + walls["change"]:
+        v, wins = verdict(walls["base"], walls["change"], True, None)
+        print(f"{'wall_pass_ms':34} {'ms':>5} {fmt(walls['base'], '%.0f'):>30} "
+              f"{fmt(walls['change'], '%.0f'):>30} {wins:>3}/{args.pairs:<2}  {v}")
     # the canaries read just before and after each run: a drift between the
     # sides' medians means the host, not the code, moved
     for key in ("canary_ms", "canary_par_ms"):
